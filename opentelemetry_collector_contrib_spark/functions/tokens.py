@@ -110,8 +110,3 @@ def decode_tokens_udf(tokens: pd.Series) -> pd.Series:
     spark.sql.execution.arrow.maxRecordsPerBatch).
     """
     return decode_batch(tokens)
-
-
-def decoded_body(tokens_col) -> "F.Column":
-    """Body column expression for a tokens column."""
-    return decode_tokens_udf(tokens_col)

@@ -98,9 +98,3 @@ def parse_syslog(df: DataFrame, line_col: str = "line") -> DataFrame:
             .withColumn("sd", F.when(is_5424, sd_map))
             .withColumn("msg",
                         F.when(is_5424, g5(9)).when(is_3164, g3(8))))
-
-
-def syslog_oracle_exprs() -> dict[str, str]:
-    """Shared severity-name list for oracle builders."""
-    names = ", ".join(f"'{n}'" for n in SEVERITY_NAMES)
-    return {"sev_names": f"[{names}]"}

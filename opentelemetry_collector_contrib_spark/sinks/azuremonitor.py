@@ -136,18 +136,6 @@ def span_duration(start_ns, end_ns):
                            rem % F.lit(1_000_000))
 
 
-def _peer_address():
-    """writeFormattedPeerAddressFromNetworkAttributes (:655-667)."""
-    host = F.coalesce(
-        F.when(F.length(F.coalesce(_a("net.peer.name"), F.lit(""))) > 0,
-               _a("net.peer.name")),
-        _a("net.peer.ip"), F.lit(""))
-    port = F.coalesce(_ai("net.peer.port"), F.lit(0))
-    return F.when(port != 0,
-                  F.concat(host, F.lit(":"), port.cast("string"))) \
-        .otherwise(host)
-
-
 def _url_host(url_col):
     """Go url.Parse(...).Host — scheme-stripped authority incl. port."""
     return F.regexp_extract(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)", 1)

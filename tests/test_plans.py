@@ -194,6 +194,25 @@ def test_ngram_profile_is_two_arrow_passes(spark):
     assert "partial_count" in plan
 
 
+def test_pack_tokens_is_jvm_single_exchange(spark):
+    """pack_tokens slices with built-ins (no Python stage), and the
+    cumsum window's hashpartitioning(grp) also serves the reassembly
+    groupBy(grp, chunk) — the token payload is shuffled once."""
+    from opentelemetry_collector_contrib_spark.datapipe.curation import (
+        pack_tokens)
+    df = spark.createDataFrame([("d", [1, 2, 3])],
+                               "doc_id string, tokens array<int>")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = plan_of(pack_tokens(df, budget=2, n_groups=4))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert not re.findall(r"\(\d+\) (?:ArrowEvalPython|MapInArrow)", plan)
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
+    assert re.search(r"Arguments: hashpartitioning\(grp#\d+, \d+\)", plan)
+
+
 def test_stratified_sample_is_shuffle_free(spark):
     from opentelemetry_collector_contrib_spark.datapipe.dedup import (
         stratified_sample)

@@ -130,3 +130,75 @@ def test_pack_chunks_spark_matches_python_twin(spark):
     got = {r.doc_id: (r.first_chunk, r.last_chunk, r.chunk_offset)
            for r in pack_chunks(df, budget=777, n_groups=1).collect()}
     assert got == _pack_py(items, 777)
+
+
+def _pack_grp_py(doc_id, n_groups):
+    """Twin of curation._pack_grp: md5's first 32 bits mod n_groups."""
+    import hashlib
+    return int(hashlib.md5(doc_id.encode()).hexdigest()[:8], 16) % n_groups
+
+
+def _pack_tokens_py(docs, budget, n_groups):
+    """Pure-Python twin of pack_tokens: per md5 group, concat the
+    id-sorted docs' tokens and cut budget-token windows; each window
+    lists the (doc_id, start, len) span of every doc it holds."""
+    groups = {}
+    for doc_id, toks in docs:
+        groups.setdefault(_pack_grp_py(doc_id, n_groups), []).append(
+            (doc_id, toks or []))
+    out = []
+    for g, items in groups.items():
+        chunks, pos = {}, 0
+        for doc_id, toks in sorted(items, key=lambda d: d[0]):
+            for i, t in enumerate(toks):
+                c, off = divmod(pos + i, budget)
+                packed, spans = chunks.setdefault(c, ([], []))
+                if i == 0 or off == 0:
+                    spans.append([doc_id, off, 0])
+                packed.append(t)
+                spans[-1][2] += 1
+            pos += len(toks)
+        out += [(g, c, len(spans), packed, [tuple(s) for s in spans],
+                 len(packed)) for c, (packed, spans) in chunks.items()]
+    return sorted(out)
+
+
+def test_pack_tokens_edge_cases_match_python_twin(spark):
+    """NULL/empty arrays, lengths 1, B-1, B, B+1 and 3B in two md5
+    groups, with docs that start exactly on a chunk boundary — the
+    multi-chunk slicing path the synthetic tables never reach."""
+    from opentelemetry_collector_contrib_spark.datapipe.curation import (
+        pack_tokens)
+    B, n_groups = 8, 2
+    lengths = {0: [B, 3 * B, 1, None, B - 1, 0, B + 1, 1],
+               1: [1, None, B - 1, 1, 3 * B, 0, B, B + 1]}
+    docs = []
+    for g, lens in lengths.items():
+        for k, n in enumerate(lens):
+            salt = 0         # pick an id that lands in group g
+            while _pack_grp_py(doc_id := f"g{g}_{k:02d}_{salt}",
+                               n_groups) != g:
+                salt += 1
+            base = 1000 * len(docs)
+            docs.append((doc_id, None if n is None
+                         else list(range(base, base + n))))
+    out = pack_tokens(spark.createDataFrame(
+        docs, "doc_id string, tokens array<int>"), budget=B,
+        n_groups=n_groups)
+    dtypes = dict(out.dtypes)
+    assert dtypes["chunk"] == "bigint"
+    assert dtypes["tokens"] == "array<int>"
+    assert dtypes["spans"] == \
+        "array<struct<doc_id:string,start:int,len:int>>"
+    got = sorted((r.grp, r.chunk, r.n_docs, r.tokens,
+                  [tuple(s) for s in r.spans], r.n_tok)
+                 for r in out.collect())
+    want = _pack_tokens_py(docs, B, n_groups)
+    assert got == want
+    # the fixture really covers both groups, a doc spanning 4 chunks
+    # and a non-first doc starting on a boundary (chunk_offset 0)
+    assert {r[0] for r in want} == {0, 1}
+    assert max(sum(s[0] == d for r in want for s in r[4])
+               for d, _ in docs) == 4
+    assert any(r[1] > 0 and r[4][0][1] == 0 and r[3][0] % 1000 == 0
+               for r in want)
